@@ -1,0 +1,8 @@
+import sys
+from pathlib import Path
+
+BENCH = Path(__file__).resolve().parents[1]
+ROOT = BENCH.parent
+for p in (str(ROOT), str(BENCH)):
+    if p not in sys.path:
+        sys.path.insert(0, p)
