@@ -7,11 +7,12 @@ close/rings, crossings+kerbs) -> EPSG:4326 outputs.
 
 Scale design: streets are assigned to every TILE whose halo-padded
 square their segment bbox touches; each tile is processed independently
-in ``groupBy(tile).applyInPandas`` (the shuffle key is the tile id, so a
-1000-executor cluster spreads tiles evenly; skewed mega-tiles are the
-same knob as H3 resolution — shrink TILE_SIZE_M). Features are emitted
-only by the tile that *owns* their representative point, so the halo
-overlap never duplicates output.
+by the per-tile kernel, inside cost-balanced buckets of tiles
+(``streaming.checkpoint.run_tiled_job``: one tile census, LPT
+placement, optional per-tile checkpoint; skewed mega-tiles are the same
+knob as H3 resolution — shrink TILE_SIZE_M). Features are emitted only
+by the tile that *owns* their representative point, so the halo overlap
+never duplicates output.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from ..geometry import core, wkb
 from ..synth import CITY_LAT0, CITY_LON0, ensure_synth
 from ..functions.geo import st_explode_segments, make_transform_udf
 from ..operators.tiling import cover_cells
+from ..streaming.checkpoint import run_tiled_job
 from . import kernels
 
 WIDTHS_ITEMS = sorted(P.DEFAULT_WIDTHS.items())
@@ -246,83 +248,6 @@ def _tile_bounds(tile: int, size: float) -> tuple[float, float, float, float]:
 
 def _owns(x: float, y: float, b) -> bool:
     return b[0] <= x < b[2] and b[1] <= y < b[3]
-
-
-def make_bucket_kernel(tile_size: float, halo: float = P.TILE_HALO_M,
-                       **pipe_opts):
-    """Cogrouped kernel over a cost-balanced BUCKET of tiles: runs the
-    per-tile kernel for each tile sub-group. Used by the LPT placement
-    in ``generate_features`` (the per-tile Python loop is over ~4-5
-    tiles, negligible next to the kernels themselves)."""
-    tk = make_tile_kernel(tile_size, halo, **pipe_opts)
-    empty = pd.DataFrame()
-
-    def kernel(key, pdf: pd.DataFrame, ctx: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        cgs = (dict(tuple(ctx.groupby("tile")))
-               if ctx is not None and len(ctx) else {})
-        for t, g in pdf.groupby("tile"):
-            outs.append(tk((t,), g, cgs.get(t, empty)))
-        if not outs:
-            return pd.DataFrame(columns=[f.name for f in FEATURE_SCHEMA])
-        return pd.concat(outs, ignore_index=True)
-
-    return kernel
-
-
-_BUCKET_ID_CACHE: dict = {}
-_LPT_MAP_CACHE: dict = {}
-
-
-def _hash_aligned_bucket_ids(spark: SparkSession, n_part: int) -> list:
-    """One int id per partition p with pmod(murmur3(id), n_part) == p.
-
-    ``repartition(n, col)`` places rows by the hash of the column, so
-    arbitrary bucket numbers 0..n-1 would collide into ~63% of the
-    partitions (Poisson) and wreck a balanced assignment. Evaluating
-    Spark's own hash over a small id range (one tiny job) yields ids
-    that map bijectively onto partitions."""
-    if n_part in _BUCKET_ID_CACHE:
-        return _BUCKET_ID_CACHE[n_part]
-    rows = spark.range(0, 64 * n_part).select(
-        F.col("id").cast("int").alias("b"),
-        F.pmod(F.hash(F.col("id").cast("int")), F.lit(n_part)).alias("p")
-    ).collect()
-    m: dict = {}
-    for r in rows:
-        if r.p not in m:
-            m[r.p] = r.b
-    if len(m) < n_part:     # astronomically unlikely at 64x oversample
-        raise RuntimeError(f"hash alignment found {len(m)}/{n_part}")
-    _BUCKET_ID_CACHE[n_part] = [m[p] for p in range(n_part)]
-    return _BUCKET_ID_CACHE[n_part]
-
-
-# above this many tiles the per-tile cost census is no longer a
-# driver-sized collect; fall back to plain hash placement
-_LPT_MAX_TILES = 200_000
-
-
-def _lpt_bucket_map(spark: SparkSession, tiled: DataFrame, n_part: int
-                    ) -> list | None:
-    """Greedy longest-processing-time assignment of tiles to hash-
-    aligned buckets by per-tile segment count (+ a fixed per-tile
-    overhead). Returns [(tile, bucket_id)], or None when the tile
-    census exceeds the driver-collect cap."""
-    import heapq
-    costs = tiled.groupBy("tile").agg(F.count(F.lit(1)).alias("n"))
-    rows = costs.limit(_LPT_MAX_TILES + 1).collect()
-    if len(rows) > _LPT_MAX_TILES:
-        return None
-    ids = _hash_aligned_bucket_ids(spark, n_part)
-    heap = [(0, p) for p in range(n_part)]
-    heapq.heapify(heap)
-    mapping = []
-    for r in sorted(rows, key=lambda r: (-r.n, r.tile)):
-        load, p = heapq.heappop(heap)
-        mapping.append((r.tile, ids[p]))
-        heapq.heappush(heap, (load + r.n + 20, p))
-    return mapping
 
 
 def make_tile_kernel(tile_size: float, halo: float = P.TILE_HALO_M,
@@ -545,57 +470,13 @@ def load_context_tiled(spark: SparkSession, sf_dir: str,
             tile_size, pad=halo)))
 
 
-import collections
-import threading
-
-_CACHED: "collections.OrderedDict[int, DataFrame]" = \
-    collections.OrderedDict()
-_CACHE_LOCK = threading.Lock()
-# plans cached by the latest generate_features calls stay persisted;
-# older ones are released. Keyed by ``semanticHash`` (r06): Spark's
-# CacheManager dedupes identical logical plans into ONE shared entry,
-# so the previous FIFO list evicted a re-pushed plan's handle and
-# thereby dropped the cache the NEWER identical plan relied on
-# (repeat 3+ of a bench loop silently recomputed the scan). Re-pushing
-# a semantically equal plan now just refreshes its LRU slot. N=4
-# covers two concurrent generate_features calls x (tiled + ctx).
-# Each returned plan also carries its own handle (``df._sw_cache``)
-# so a caller holding more plans can manage lifetimes explicitly.
-_CACHE_KEEP = 4
-
-
-def release_cached() -> None:
-    """Unpersist every DataFrame cached by earlier generate_features
-    calls (explicit all-plans-have-run release, e.g. end of a bench
-    loop)."""
-    with _CACHE_LOCK:
-        while _CACHED:
-            _CACHED.popitem()[1].unpersist()
-
-
-def _cache_push(df: DataFrame) -> None:
-    key = df.semanticHash()
-    with _CACHE_LOCK:
-        if key in _CACHED:
-            _CACHED.move_to_end(key)
-            return
-        _CACHED[key] = df
-        while len(_CACHED) > _CACHE_KEEP:
-            _CACHED.popitem(last=False)[1].unpersist()
-
-
-def generate_features(spark: SparkSession, sf_dir: str,
-                      tile_size: float = P.TILE_SIZE_M,
-                      halo: float = P.TILE_HALO_M,
-                      **pipe_opts) -> DataFrame:
-    """End-to-end: streets -> per-tile sidewalk/crossing/kerb/protoblock
-    features (local-TM WKB) with halo-overlap tiling + ownership dedup.
-
-    Streets are cogrouped per tile with building segments + POIs (the
-    context side of the width-shrink and Voronoi-splitting stages).
-    ``pipe_opts`` forward to ``kernels.tile_pipeline`` (optional GUI
-    parity stages, see ``make_tile_kernel``).
-    """
+def tiled_inputs(spark: SparkSession, sf_dir: str,
+                 tile_size: float = P.TILE_SIZE_M,
+                 halo: float = P.TILE_HALO_M
+                 ) -> tuple[DataFrame, DataFrame]:
+    """The one pipeline prefix: (tile-exploded street segments, tiled
+    context). Load -> AOI prefilter -> widths -> TM segments -> AOI clip
+    -> tile explode with halo."""
     streets = load_streets(spark, sf_dir)
     streets = clip_to_aoi(streets, spark, sf_dir)
     streets = assign_widths(streets)
@@ -613,88 +494,30 @@ def generate_features(spark: SparkSession, sf_dir: str,
             F.least("ax", "bx"), F.least("ay", "by"),
             F.greatest("ax", "bx"), F.greatest("ay", "by"),
             tile_size, pad=halo)))
-    ctx = load_context_tiled(spark, sf_dir, tile_size, halo)
-    # Explicit partition count: the tile groups are tiny in BYTES but
-    # heavy in COMPUTE, so AQE's size-based partition coalescing would
-    # serialize the expensive kernels onto one task. An explicit
-    # repartition(n, tile) pins the exchange (AQE leaves user-specified
-    # counts alone) and the cogroup reuses the clustering. ~4 tasks per
-    # core keeps the heavy-tailed tile costs load-balanced (measured
-    # best at sf0.1); SPARK_GRAFT_NPART pins it for A/B scaling runs.
-    import os
-    # Cost-balanced placement: hash placement of ~uniform tiles is
-    # Poisson per partition (max ~2.5x mean at 4 tiles/partition), and
-    # that straggler factor IS the measured scaling residual. LPT over
-    # the per-tile segment census into hash-aligned buckets makes every
-    # partition carry a near-equal load. Costs one cheap count pass.
-    use_lpt = os.environ.get("SPARK_GRAFT_LPT", "1") != "0"
-    # Partitions per core: with LPT the balance is explicit, so 2
-    # buckets/core suffice and halve the per-task Python round-trip
-    # overhead (interleaved A/B at sf0.1: 6.2-6.3 s vs 7.5-7.6 s at
-    # 4/core); hash placement keeps 4/core because its balance comes
-    # only from Poisson granularity. Both scale with the cluster via
-    # defaultParallelism; SPARK_GRAFT_NPART pins for A/B runs. (The
-    # rare LPT->hash fallback above the census cap inherits 2/core —
-    # acceptable: that path is planet-scale, where tiles/partition is
-    # huge and Poisson imbalance vanishes.)
-    mult = 2 if use_lpt else 4
-    n_part = int(os.environ.get("SPARK_GRAFT_NPART", "0")) \
-        or max(spark.sparkContext.defaultParallelism * mult, 32)
-    if use_lpt:
-        # census + kernel input share one computation of the clipped/
-        # exploded segments (the census would otherwise re-run the
-        # whole upstream scan+clip+explode as a second pass). The cache
-        # must outlive this call (the cogroup plan executes later):
-        # a bounded LRU keeps the latest _CACHE_KEEP plans persisted
-        # and releases older ones (see _cache_push). ctx joins the same
-        # mechanism (r06): it is recomputed identically by every
-        # feature-plan execution, and its subtree crosses the Python
-        # boundary (WKB decode), so steady-state runs should reuse it
-        # exactly like the segment side.
-        tiled = tiled.persist()
-        _cache_push(tiled)
-        ctx = ctx.persist()
-        _cache_push(ctx)
-    cached = tiled if use_lpt else None
-    # Placement memo (r06): the LPT census is an action over the
-    # persisted segment table, and steady-state callers (bench loops,
-    # resumed jobs) rebuild the IDENTICAL plan — keyed by
-    # (semanticHash, n_part) the census collect runs once per distinct
-    # input instead of once per call. Placement metadata only: a stale
-    # or colliding entry could only unbalance partitions, never change
-    # results (ownership dedup and fids are tile-derived). The
-    # None decision (census above the driver cap) is memoized too.
-    mapping = None
-    if use_lpt:
-        mkey = (tiled.semanticHash(), n_part)
-        if mkey in _LPT_MAP_CACHE:
-            mapping = _LPT_MAP_CACHE[mkey]
-        else:
-            mapping = _lpt_bucket_map(spark, tiled, n_part)
-            _LPT_MAP_CACHE[mkey] = mapping
-            while len(_LPT_MAP_CACHE) > 4:
-                _LPT_MAP_CACHE.pop(next(iter(_LPT_MAP_CACHE)))
-    if mapping is None:     # planet-sized tile census: hash placement
-        out = (tiled.repartition(n_part, "tile").groupBy("tile")
-               .cogroup(ctx.repartition(n_part, "tile").groupBy("tile"))
-               .applyInPandas(make_tile_kernel(tile_size, **pipe_opts),
-                              FEATURE_SCHEMA))
-        out._sw_cache = cached   # caller-owned lifetime handle
-        return out
-    # two separate map DFs: joining the same DF on both cogroup sides
-    # trips the ambiguous-self-join check
-    schema = "tile long, _bucket int"
-    tiled = tiled.join(
-        F.broadcast(spark.createDataFrame(mapping, schema)), "tile")
-    ctx = ctx.join(
-        F.broadcast(spark.createDataFrame(mapping, schema)), "tile")
-    out = (tiled.repartition(n_part, "_bucket").groupBy("_bucket")
-           .cogroup(ctx.repartition(n_part, "_bucket")
-                    .groupBy("_bucket"))
-           .applyInPandas(make_bucket_kernel(tile_size, **pipe_opts),
-                          FEATURE_SCHEMA))
-    out._sw_cache = cached       # caller-owned lifetime handle
-    return out
+    return tiled, load_context_tiled(spark, sf_dir, tile_size, halo)
+
+
+def generate_features(spark: SparkSession, sf_dir: str,
+                      tile_size: float = P.TILE_SIZE_M,
+                      halo: float = P.TILE_HALO_M,
+                      checkpoint_dir: str | None = None,
+                      **pipe_opts) -> DataFrame:
+    """End-to-end: streets -> per-tile sidewalk/crossing/kerb/protoblock
+    features (local-TM WKB) with halo-overlap tiling + ownership dedup.
+
+    Streets are cogrouped per tile with building segments + POIs (the
+    context side of the width-shrink and Voronoi-splitting stages),
+    placed by one bounded tile census (``run_tiled_job``).
+    ``pipe_opts`` forward to ``kernels.tile_pipeline`` (optional GUI
+    parity stages, see ``make_tile_kernel``). Without
+    ``checkpoint_dir`` returns the lazy feature DataFrame; with it,
+    computes only the tiles not yet committed there and returns the
+    committed features of the current tiles.
+    """
+    tiled, ctx = tiled_inputs(spark, sf_dir, tile_size, halo)
+    return run_tiled_job(
+        spark, tiled, ctx, make_tile_kernel(tile_size, **pipe_opts),
+        FEATURE_SCHEMA, checkpoint_dir)
 
 
 def features_4326(features: DataFrame) -> DataFrame:

@@ -7,6 +7,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _driver_mem() -> str:
+    """Half the host's RAM: local mode runs the executors inside the
+    driver JVM, and the Python workers need the rest."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2**31)}g"
+
+
 def get_spark(app: str = "osm_sidewalkreator_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -26,7 +33,7 @@ def get_spark(app: str = "osm_sidewalkreator_spark",
         "GLIBC_TUNABLES",
         "glibc.malloc.mmap_threshold=134217728"
         ":glibc.malloc.trim_threshold=134217728")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(os.environ.get(
         "SPARK_GRAFT_SHUFFLE", cpus))
@@ -41,7 +48,7 @@ def get_spark(app: str = "osm_sidewalkreator_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_mem()))
         .config("spark.ui.enabled", "false")
         # propagate the malloc tunables to executor-side Python workers
         # on real clusters (local mode inherits the driver env)

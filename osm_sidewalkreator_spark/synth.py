@@ -3,7 +3,8 @@
 No external data, no RNG state dependence: every value is a closed-form
 function of indices (splitmix64 where pseudo-randomness is needed), so
 the same scale always produces byte-identical parquet. Tables land under
-``/root/repo/data/synth/<scale>/`` keyed by the driver's sf directory
+``data/synth/<scale>/`` of the repository (or under
+``SPARK_GRAFT_SYNTH_ROOT``) keyed by the driver's sf directory
 name; the DuckDB oracle SQL in ``__spark_entry__.py`` reads the same
 files via ``read_parquet``.
 
@@ -39,8 +40,9 @@ SCALES = {
     "sf0.4": {"k": 240, "pages": 10_000},
 }
 
-SYNTH_ROOT = Path(os.environ.get("SPARK_GRAFT_SYNTH_ROOT",
-                                 "/root/repo/data/synth"))
+SYNTH_ROOT = Path(os.environ.get(
+    "SPARK_GRAFT_SYNTH_ROOT",
+    Path(__file__).resolve().parents[1] / "data" / "synth"))
 
 
 def scale_name(sf_dir: str) -> str:

@@ -61,12 +61,9 @@ def _wait_quiet() -> None:
 def run_bench(cpus: int, sf_dir: str) -> dict:
     # shuffle-partition count held CONSTANT across parallelism levels so
     # the comparison isolates cores (same plan, same partition count)
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
-               SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_SHUFFLE=os.environ.get(
-                   "SPARK_GRAFT_SHUFFLE", "64"),
-               SPARK_GRAFT_NPART=os.environ.get(
-                   "SPARK_GRAFT_NPART", "128"))
+    env = {"SPARK_GRAFT_SHUFFLE": "64", "SPARK_GRAFT_NPART": "128",
+           **os.environ,
+           "SPARK_GRAFT_CPUS": str(cpus), "SPARK_GRAFT_SF_DIR": sf_dir}
     for attempt in range(STEAL_RETRY):
         _wait_quiet()
         s0, t0 = _cpu_jiffies()
@@ -274,30 +271,6 @@ def _report(lo, hi, sf_dir, n):
         f"{STEAL_RETRY}x when the gate fails; the reported leg is the "
         "last attempt.",
     ]
-    bal_path = bench_dir / "BALANCE.json"
-    if bal_path.exists():
-        bal = json.loads(bal_path.read_text())
-        h, l = bal["hash_placement"], bal["lpt_placement"]
-        md += [
-            "",
-            "## Deterministic load balance (scripts/balance_stats.py)",
-            "",
-            "Per-partition kernel load (segment count + per-tile "
-            f"overhead) for {bal['n_tiles']} tiles over "
-            f"{bal['n_part']} partitions — a pure function of the data "
-            "and Spark's hash, immune to host noise:",
-            "",
-            "| placement | partitions used | max/mean load |",
-            "|---|---|---|",
-            f"| hash (round-1) | {h['partitions_used']} | "
-            f"{h['max_over_mean']} |",
-            f"| LPT buckets (current) | {l['partitions_used']} | "
-            f"{l['max_over_mean']} |",
-            "",
-            "The last-wave straggler bound scales with max/mean; LPT "
-            "placement removes the Poisson 2x tail that hash placement "
-            "puts on ~uniform tiles.",
-        ]
     burn_path = bench_dir / "BURN_CONTROL.json"
     if burn_path.exists():
         b = json.loads(burn_path.read_text())

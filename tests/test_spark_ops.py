@@ -145,21 +145,16 @@ def test_media_fake_batch_shape(spark):
 
 def test_checkpoint_resume(spark, tmp_path):
     """North-rule: kill/restart resumes from the tile manifest."""
-    from osm_sidewalkreator_spark.operators.tiling import cover_cells
-    from osm_sidewalkreator_spark.streaming.checkpoint import (
-        TileManifest, run_tiled_job)
-    streets = PL.assign_widths(
-        PL.clip_to_aoi(PL.load_streets(spark, SF), spark, SF))
-    segs = PL.street_segments_tm(streets)
-    tiled = segs.withColumn("tile", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"),
-        P.TILE_SIZE_M, pad=P.TILE_HALO_M)))
-    job_dir = tmp_path / "job1"
-    k3 = PL.make_tile_kernel(P.TILE_SIZE_M)
+    import json as _json
+    import os
 
-    out1 = run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA, str(job_dir))
-    n1 = out1.count()
+    from osm_sidewalkreator_spark.streaming.checkpoint import TileManifest
+    job_dir = tmp_path / "job1"
+
+    def run():
+        return PL.generate_features(spark, SF, checkpoint_dir=str(job_dir))
+
+    n1 = run().count()
     man = TileManifest(str(job_dir))
     committed = man.committed()
     assert len(committed) > 0
@@ -169,15 +164,12 @@ def test_checkpoint_resume(spark, tmp_path):
     for row in committed.values():
         assert "input_fingerprint" in row and "seconds" in row
     # resume: nothing recomputes (tile parquet mtimes untouched)
-    import os
     mtimes = {p: os.path.getmtime(p) for p in
               (job_dir / "tiles").glob("*.parquet")}
-    out2 = run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA, str(job_dir))
-    assert out2.count() == n1
+    assert run().count() == n1
     assert {p: os.path.getmtime(p) for p in
             (job_dir / "tiles").glob("*.parquet")} == mtimes
     # lineage: tamper one tile's fingerprint -> exactly that tile redoes
-    import json as _json
     rows = list(man.committed().values())
     victim = next(r for r in rows if r.get("path"))
     victim_path = victim["path"]
@@ -186,8 +178,7 @@ def test_checkpoint_resume(spark, tmp_path):
         for r in rows:
             f.write(_json.dumps(r) + "\n")
     os.remove(victim_path)
-    out3 = run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA, str(job_dir))
-    assert out3.count() == n1
+    assert run().count() == n1
     assert os.path.exists(victim_path)
     untouched = {p: m for p, m in mtimes.items() if str(p) != victim_path}
     assert all(os.path.getmtime(p) == m for p, m in untouched.items())
@@ -196,52 +187,70 @@ def test_checkpoint_resume(spark, tmp_path):
 def test_checkpoint_deleted_tile_not_resurrected(spark, tmp_path):
     """A tile whose segments vanish from the input must not keep its
     stale committed output in the resumed result (the fingerprint
-    anti-join alone only catches CHANGED tiles, not deleted ones)."""
-    from osm_sidewalkreator_spark.operators.tiling import cover_cells
+    check alone only catches CHANGED tiles, not deleted ones)."""
     from osm_sidewalkreator_spark.streaming.checkpoint import run_tiled_job
-    streets = PL.assign_widths(
-        PL.clip_to_aoi(PL.load_streets(spark, SF), spark, SF))
-    segs = PL.street_segments_tm(streets)
-    tiled = segs.withColumn("tile", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"),
-        P.TILE_SIZE_M, pad=P.TILE_HALO_M)))
     job_dir = tmp_path / "job_del"
-    k3 = PL.make_tile_kernel(P.TILE_SIZE_M)
-    out1 = run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA, str(job_dir))
+    out1 = PL.generate_features(spark, SF, checkpoint_dir=str(job_dir))
     tiles1 = {r["tile"] for r in out1.select("tile").distinct().collect()}
     victim = min(tiles1)
+    tiled, ctx = PL.tiled_inputs(spark, SF)
     shrunk = tiled.filter(F.col("tile") != victim)
-    out2 = run_tiled_job(spark, shrunk, k3, PL.FEATURE_SCHEMA,
-                         str(job_dir))
+    out2 = run_tiled_job(spark, shrunk, ctx,
+                         PL.make_tile_kernel(P.TILE_SIZE_M),
+                         PL.FEATURE_SCHEMA, str(job_dir))
     tiles2 = {r["tile"] for r in out2.select("tile").distinct().collect()}
     assert victim not in tiles2
     assert tiles2 == tiles1 - {victim}
 
 
 def test_tiled_job_matches_generate_features(spark, tmp_path):
-    """The production launch path (run_tiled_job with real context) must
-    produce exactly the feature set of the verified query path
-    (PL.generate_features) on the same input (VERDICT r1 wrong #2)."""
-    from osm_sidewalkreator_spark.operators.tiling import cover_cells
-    from osm_sidewalkreator_spark.streaming.checkpoint import run_tiled_job
-    streets = PL.assign_widths(
-        PL.clip_to_aoi(PL.load_streets(spark, SF), spark, SF))
-    segs = PL.street_segments_tm(streets)
-    tiled = segs.withColumn("tile", F.explode(cover_cells(
-        F.least("ax", "bx"), F.least("ay", "by"),
-        F.greatest("ax", "bx"), F.greatest("ay", "by"),
-        P.TILE_SIZE_M, pad=P.TILE_HALO_M)))
-    ctx = PL.load_context_tiled(spark, SF, P.TILE_SIZE_M, P.TILE_HALO_M)
-    k3 = PL.make_tile_kernel(P.TILE_SIZE_M)
-    got = run_tiled_job(spark, tiled, k3, PL.FEATURE_SCHEMA,
-                        str(tmp_path / "job2"), ctx_tiled=ctx)
-    want = PL.generate_features(spark, SF)
-    gp = got.select("tile", "kind", "fid", "cx", "cy").toPandas() \
-        .sort_values(["tile", "kind", "fid"]).reset_index(drop=True)
-    wp = want.select("tile", "kind", "fid", "cx", "cy").toPandas() \
-        .sort_values(["tile", "kind", "fid"]).reset_index(drop=True)
-    assert gp.equals(wp)
+    """The production launch path (generate_features with a checkpoint
+    directory, as job.py runs it) must produce exactly the feature set
+    of the lazy query path on the same input and options (VERDICT r1
+    wrong #2); export_snap checks that pipe_opts reach the checkpointed
+    kernel too."""
+    cols = ["tile", "kind", "fid", "cx", "cy", "geometry"]
+    for i, pipe_opts in enumerate([{}, {"export_snap": True}]):
+        got = PL.generate_features(spark, SF, checkpoint_dir=str(
+            tmp_path / f"job{i}"), **pipe_opts)
+        want = PL.generate_features(spark, SF, **pipe_opts)
+        gp = got.select(*cols).toPandas() \
+            .sort_values(["tile", "kind", "fid"]).reset_index(drop=True)
+        wp = want.select(*cols).toPandas() \
+            .sort_values(["tile", "kind", "fid"]).reset_index(drop=True)
+        assert gp.equals(wp), pipe_opts
+
+
+def test_tile_census_is_bounded(spark, tmp_path, monkeypatch):
+    """The one tile census is a bounded driver collect in both modes:
+    above the bound the call names the bound and --tile-size."""
+    from osm_sidewalkreator_spark.streaming import checkpoint as CK
+    monkeypatch.setattr(CK, "_LPT_MAX_TILES", 1)
+    for job_dir in (None, str(tmp_path / "job_cap")):
+        with pytest.raises(ValueError, match="exceeds 1 tiles.*--tile-size"):
+            PL.generate_features(spark, SF, checkpoint_dir=job_dir)
+
+
+def test_no_state_outlives_a_call(spark, tmp_path):
+    """generate_features persists nothing and the pipeline modules keep
+    no plan or placement cache between calls."""
+    from osm_sidewalkreator_spark.streaming import checkpoint as CK
+
+    def persisted():    # RDD ids, including persisted DataFrame plans
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    def module_caches():
+        return [n for m in (PL, CK) for n, v in vars(m).items()
+                if not n.startswith("__")
+                and isinstance(v, (dict, set)) and v]
+
+    before = persisted()    # other tests' session-scoped caches
+    PL.generate_features(spark, SF, checkpoint_dir=str(tmp_path / "j"))
+    assert persisted() <= before    # nothing new; GC may drop old ones
+    assert module_caches() == []
+    PL.generate_features(spark, SF).count()
+    assert persisted() <= before    # nothing new; GC may drop old ones
+    assert module_caches() == []
 
 
 def test_lsh_multitable_recall(spark):
